@@ -290,7 +290,7 @@ def _crawl_prepare(spark, cores: int):
     warm_pages = spark.createDataFrame(wg.corpus_pandas(warm_spec, warm_sites))
     crawl(
         spark, warm_pages,
-        CrawlParams(wave_seconds=100.0, use_bloom=True, n_shards=64,
+        CrawlParams(wave_seconds=100.0, n_shards=64,
                     record_order=False, max_waves=4),
         sites=warm_sites,
     )
@@ -311,22 +311,18 @@ def phase_crawl(cores: int) -> dict:
     # (~1.5 GB of text per run), which degraded rep 2+ by 2-4x.
     import gc
 
-    defer = os.environ.get("BENCH_DEFER", "0") == "1"
     walls, metric_runs, step_runs, waves = [], [], [], 0
     for _ in range(CRAWL_REPS):
         t0 = time.time()
         res = crawl(
             spark, pages,
-            CrawlParams(wave_seconds=CRAWL_WAVE_SECONDS, use_bloom=True,
-                        n_shards=64, record_order=False, max_waves=12,
-                        n_salts=16, defer_detail_parse=defer),
+            CrawlParams(wave_seconds=CRAWL_WAVE_SECONDS, n_shards=64,
+                        record_order=False, max_waves=12),
             sites=sites,
             pages_prepartitioned=True,
         )
-        # materialize the items OUTPUT inside the timed window (round 5):
-        # the crawl's product is the items table, and the defer variant
-        # moves detail-text extraction into exactly this materialization
-        # — without it the two engine paths would not be comparable
+        # materialize the items OUTPUT inside the timed window: the
+        # crawl's product is the items table
         res.items.write.format("noop").mode("overwrite").save()
         walls.append(time.time() - t0)
         metric_runs.append(res.metrics)
@@ -367,10 +363,10 @@ def phase_crawl(cores: int) -> dict:
 
 def phase_crawl_store(cores: int) -> dict:
     """Durable-state tax: ONE rep with a LakeStore attached — every wave
-    pays stage + atomic multi-table checkpoint + GC + state re-read. The
-    tax is MEASURED inside the run (CrawlResult.step_walls["store_commit"]
-    accumulates the join-state + append + stage + atomic-checkpoint + GC +
-    re-read wall per wave) — subtracting a separate no-store run drifted
+    pays stage + atomic multi-table checkpoint + GC. The tax is MEASURED
+    inside the run (CrawlResult.step_walls["store_commit"] accumulates
+    the join-state + append + stage + atomic-checkpoint + GC wall per
+    wave) — subtracting a separate no-store run drifted
     with ambient load and once produced a negative "overhead"."""
     import shutil
     import tempfile
@@ -385,9 +381,8 @@ def phase_crawl_store(cores: int) -> dict:
         t0 = time.time()
         res = crawl(
             spark, pages,
-            CrawlParams(wave_seconds=CRAWL_WAVE_SECONDS, use_bloom=True,
-                        n_shards=64, record_order=False, max_waves=12,
-                        n_salts=16),
+            CrawlParams(wave_seconds=CRAWL_WAVE_SECONDS, n_shards=64,
+                        record_order=False, max_waves=12),
             sites=sites,
             store=LakeStore(root),
             pages_prepartitioned=True,
@@ -841,7 +836,7 @@ def _write_bench_md(r: dict, crawl_pairs: dict, parse_pairs: dict) -> None:
         f"```json\n{json.dumps(r['durable_state'], indent=2)}\n```",
         "",
         "Every wave pays join-state + append + stage + atomic multi-table "
-        "checkpoint + GC + durable state re-read; overhead_sec is the "
+        "checkpoint + GC; overhead_sec is the "
         "run's own step_walls['store_commit'] accumulator (measured "
         "in-run), quantifying the per-wave durability cost the "
         "store=None scaling runs exclude.",

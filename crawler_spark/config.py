@@ -148,9 +148,3 @@ def crawl_config_df(spark: SparkSession, sites: tuple[SiteConfig, ...] = SITES) 
         for s in sites
     ]
     return spark.createDataFrame(rows, CRAWL_CONFIG_SCHEMA)
-
-
-def seeds(sites: tuple[SiteConfig, ...] = SITES) -> list[tuple[str, str, int]]:
-    """(url, source, page=1) rows — reference start_requests expands the
-    seed templates at page=1 (``sizebid_zhaobiao.py:23-37``)."""
-    return [(t.format(page=1), s.source, 1) for s in sites for t in s.seed_templates]

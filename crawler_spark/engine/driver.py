@@ -57,13 +57,14 @@ import os
 import time
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..canonical import canonicalize_url, canonicalize_url_col, host_of, host_of_py
 from ..config import SITES, SiteConfig, crawl_config_df
-from ..functions.parsing import ENRICH_STRUCT, enrich_page
+from ..functions.parsing import enrich_page
 from ..operators import dedup as dd
 from ..operators.politeness import admit_per_host, host_budget, pop_order
 from ..operators.robots import apply_robots
@@ -144,25 +145,16 @@ METRICS_SCHEMA = T.StructType(
 class CrawlParams:
     wave_seconds: float = 8.0
     max_waves: int = 200
-    obey_robots: bool = False
-    use_bloom: bool = True
+    obey_robots: bool = False              # requires crawl(robots_rules=...)
     n_shards: int = 64
     bloom_bits_per_shard: int = 1 << 17   # 16 KiB/shard; plenty at sandbox scale
-    n_salts: int = 16                      # politeness skew split
     record_order: bool = True              # pop_seq bookkeeping (test scale)
-    acc_collapse_waves: int = 8            # output-accumulator collapse period
-    # Round-4 verdict item 4 (2→8 scaling loss pinned on the fused fetch
-    # job localCheckpointing ~1.5 GB of parsed detail text per wave
-    # through the single shared block-store write path): detail pages
-    # are TERMINAL here — their text feeds only the items output, never
-    # the next wave's frontier — so with defer_detail_parse=True the
-    # wave checkpoints only list-parse products + slim detail metadata
-    # (~200 B/row) and detail text extraction runs lazily when the
-    # items output is materialized (the sink write / accumulator
-    # collapse), flowing UDF → sink with NO block-store round trip.
-    # Byte-identical items either way (tests/test_crawl_e2e.py runs
-    # both paths against the same golden).
-    defer_detail_parse: bool = False
+
+
+# politeness skew split: admit_per_host's salt count
+_N_SALTS = 16
+# output-accumulator collapse period, in waves (see _Acc)
+_COLLAPSE_EVERY = 8
 
 
 @dataclass
@@ -223,16 +215,10 @@ class _StepClock:
 # CPU that scales with slots. Default ON — measured A/B (taskset-bound,
 # same corpus, 1 rep/level, round 4): serialized wins at BOTH levels
 # (local[2] 228.3s vs 237.4s; local[8] 68.7s vs 81.8s) and lifts 2→8
-# scaling efficiency 0.726 → 0.831. Opt out with
-# CRAWLER_SPARK_CKPT_SER=0.
-_CKPT_LEVEL = None
-if os.environ.get("CRAWLER_SPARK_CKPT_SER", "1") != "0":
-    from pyspark import StorageLevel as _SL
-
-    # PySpark's MEMORY_AND_DISK constant is the serialized level (the
-    # JVM-side deserialized variant is MEMORY_AND_DISK_DESER, which is
-    # also localCheckpoint's default)
-    _CKPT_LEVEL = _SL.MEMORY_AND_DISK
+# scaling efficiency 0.726 → 0.831. PySpark's MEMORY_AND_DISK constant
+# is the serialized level (the JVM-side deserialized variant is
+# MEMORY_AND_DISK_DESER, which is also localCheckpoint's default).
+_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
 def _checkpointed(df: DataFrame) -> DataFrame:
@@ -255,44 +241,6 @@ def _checkpointed(df: DataFrame) -> DataFrame:
         jdf.queryExecution().toRdd(), jdf.schema(), False
     )
     return DataFrame(njdf, spark)
-
-
-def _checkpoint_many(
-    dfs: list[DataFrame | None],
-    posts: list | None = None,
-    ckpt: list[bool] | None = None,
-) -> tuple[list[DataFrame | None], list]:
-    """Eager-checkpoint several DataFrames CONCURRENTLY (one thread per
-    action — Spark schedules concurrent jobs fine). Serial scheduling
-    latency (~0.3-1s per action) was a fixed ~10s/wave tax that
-    throttled scaling efficiency.
-
-    ``posts[i]`` (optional callable) runs on the checkpointed DataFrame
-    in the SAME thread — metric counts piggyback on the concurrent
-    phase instead of being separate serial jobs afterwards.
-    ``ckpt[i]=False`` skips the checkpoint and only runs the post (for
-    DataFrames that are cheap projections of an already-checkpointed
-    parent — re-materializing their payload would double the write).
-    Returns (checkpointed dfs, post results)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    posts = posts or [None] * len(dfs)
-    ckpt = ckpt or [True] * len(dfs)
-    live = [(i, df) for i, df in enumerate(dfs) if df is not None]
-    out: list[DataFrame | None] = list(dfs)
-    extras: list = [None] * len(dfs)
-
-    def work(i: int, df: DataFrame):
-        ck = _checkpointed(df) if ckpt[i] else df
-        p = posts[i]
-        return ck, (p(ck) if p is not None else None)
-
-    if live:
-        with ThreadPoolExecutor(max_workers=len(live)) as ex:
-            futs = {ex.submit(work, i, df): i for i, df in live}
-            for fut, i in futs.items():
-                out[i], extras[i] = fut.result()
-    return out, extras
 
 
 class _Acc:
@@ -340,6 +288,21 @@ def _scratch(df: DataFrame, pool: list) -> DataFrame:
     return df
 
 
+def _commit_snapshots(store: LakeStore, wave: int, pop_base: int, **tables: DataFrame) -> None:
+    """Stage every snapshot table first; the checkpoint's single atomic
+    rename then commits them ALL at once (no window where frontier is at
+    w(k) but seen at w(k-1) — lakestore docstring, ADVICE round 1).
+    Superseded snapshots are GC'd only after the checkpoint landed."""
+    cid = f"w{wave}"
+    for tb, df in tables.items():
+        store.stage_snapshot(df, tb, cid)
+    store.save_checkpoint(
+        {"wave": wave, "pop_base": pop_base, "snapshots": dict.fromkeys(tables, cid)}
+    )
+    for tb in tables:
+        store.gc_snapshots(tb, cid)
+
+
 def crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -356,6 +319,8 @@ def crawl(
     exists BEFORE any crawl starts, so re-bucketing it is not part of a
     crawl's work. When False (default) the layout is built here once."""
     params = params or CrawlParams()
+    if params.obey_robots and robots_rules is None:
+        raise ValueError("obey_robots=True needs robots_rules")
     config = crawl_config_df(spark, sites)
     # column pruning (never drag text/lang) + pre-hash-partition on the
     # join key, persisted ONCE: every wave's fetch join then shuffles
@@ -373,6 +338,15 @@ def crawl(
     wave = 0
     pop_base = 0
     metrics: list[dict] = []
+
+    def bloom_of(seen: DataFrame) -> DataFrame:
+        return dd.update_shards(
+            dd.empty_shards(spark, params.n_shards, params.bloom_bits_per_shard),
+            seen.select("url_hash"),
+            params.n_shards,
+            params.bloom_bits_per_shard,
+        )
+
     if resume and store is not None and (ckpt := store.load_checkpoint()):
         wave = int(ckpt["wave"])
         pop_base = int(ckpt.get("pop_base", 0))
@@ -397,40 +371,27 @@ def crawl(
             store.gc_snapshots(tb, cid)
         frontier = store.read_snapshot(spark, "frontier", snaps.get("frontier"), FRONTIER_SCHEMA)
         seen = store.read_snapshot(spark, "seen", snaps.get("seen"), SEEN_SCHEMA)
+        # a checkpoint without a shards snapshot gets its Bloom rebuilt
+        # from the seen set: an EMPTY Bloom would answer "not seen" for
+        # every candidate and skip the exact confirm, re-crawling them
         shards = (
-            store.read_snapshot(spark, "shards", snaps.get("shards"), dd.SHARD_SCHEMA)
-            if params.use_bloom else None
+            store.read_snapshot(spark, "shards", snaps["shards"])
+            if "shards" in snaps else bloom_of(seen)
         )
     else:
         frontier = seed_frontier(spark, sites)
         seen = frontier.select("canon", "url_hash")
-        shards = (
-            dd.update_shards(
-                dd.empty_shards(spark, params.n_shards, params.bloom_bits_per_shard),
-                seen.select("url_hash"),
-                params.n_shards,
-                params.bloom_bits_per_shard,
-            )
-            if params.use_bloom
-            else None
-        )
+        shards = bloom_of(seen)
         if store is not None:
-            snaps = {"frontier": "w0", "seen": "w0"}
-            store.stage_snapshot(frontier, "frontier", "w0")
-            store.stage_snapshot(seen, "seen", "w0")
-            if shards is not None:
-                snaps["shards"] = "w0"
-                store.stage_snapshot(shards, "shards", "w0")
-            store.save_checkpoint({"wave": 0, "pop_base": 0, "snapshots": snaps})
+            _commit_snapshots(store, 0, 0, frontier=frontier, seen=seen, shards=shards)
 
     frontier = _checkpointed(frontier)
     seen = _checkpointed(seen)
-    if shards is not None:
-        shards = _checkpointed(shards)
+    shards = _checkpointed(shards)
 
-    items_acc = _Acc(spark, ITEMS_SCHEMA, params.acc_collapse_waves)
-    errors_acc = _Acc(spark, ERRORS_SCHEMA, params.acc_collapse_waves)
-    pops_acc = _Acc(spark, POPS_SCHEMA, params.acc_collapse_waves)
+    items_acc = _Acc(spark, ITEMS_SCHEMA, _COLLAPSE_EVERY)
+    errors_acc = _Acc(spark, ERRORS_SCHEMA, _COLLAPSE_EVERY)
+    pops_acc = _Acc(spark, POPS_SCHEMA, _COLLAPSE_EVERY)
     last_pops: DataFrame | None = None
 
     cfg_cols = F.broadcast(
@@ -458,17 +419,20 @@ def crawl(
     state_fut: Future | None = None
     clk = _StepClock()
 
-    def _commit_state(seen2: DataFrame, shards2: DataFrame | None):
+    def _commit_state(seen2: DataFrame, shards2: DataFrame):
         """Background: checkpoint seen/shards concurrently, then densify
         + materialize the next wave's bloom-probe blobs — all off the
         wave-loop critical path. Inputs derive only from CHECKPOINTED
         DataFrames (new_frontier, prior seen/shards), so there is no
-        cache race with the main thread's jobs."""
-        (s2, sh2), _ = _checkpoint_many([seen2, shards2])
-        b = None
-        if sh2 is not None:
-            b = dd.densify(sh2, params.bloom_bits_per_shard).persist()
-            b.count()
+        cache race with the main thread's jobs. The two checkpoints run
+        as concurrent jobs: serial scheduling latency (~0.3-1s per
+        action) was a fixed per-wave tax that throttled scaling."""
+        with ThreadPoolExecutor(max_workers=1) as ex:
+            seen_ck = ex.submit(_checkpointed, seen2)
+            sh2 = _checkpointed(shards2)
+            s2 = seen_ck.result()
+        b = dd.densify(sh2, params.bloom_bits_per_shard).persist()
+        b.count()
         return s2, sh2, b
 
     while wave < params.max_waves:
@@ -479,12 +443,11 @@ def crawl(
         clk.t = time.time()
         scratch_pool: list[DataFrame] = []
         # bloom blobs depend only on wave-start shards: when no state
-        # pipeline is in flight (wave 1, wave after a zero-new wave, a
-        # durable-store wave), densify + warm them in the background
-        # DURING this wave's admit+fetch instead of serially at the gate
-        blobs: DataFrame | None = None
+        # pipeline is in flight (wave 1, wave after a zero-new wave),
+        # densify + warm them in the background DURING this wave's
+        # admit+fetch instead of serially at the gate
         blobs_warm: Future | None = None
-        if state_fut is None and shards is not None:
+        if state_fut is None:
             blobs = _scratch(
                 dd.densify(shards, params.bloom_bits_per_shard), scratch_pool
             )
@@ -495,7 +458,7 @@ def crawl(
         wave_errors: list[DataFrame] = []
 
         # robots gate (flag-gated; reference itself does not obey robots)
-        if params.obey_robots and robots_rules is not None:
+        if params.obey_robots:
             f = apply_robots(f, robots_rules)
             denied = f.filter(~F.col("robots_allowed"))
             wave_errors.append(
@@ -516,7 +479,7 @@ def crawl(
         # consume it — without the cache the window shuffle+sort over the
         # whole pending frontier runs twice per wave
         marked = _scratch(
-            admit_per_host(f, "budget", n_salts=params.n_salts), scratch_pool
+            admit_per_host(f, "budget", n_salts=_N_SALTS), scratch_pool
         )
         admitted = marked.filter(F.col("admitted")).drop("admitted", "budget", "eff_delay")
         deferred = marked.filter(~F.col("admitted")).select(*[c.name for c in FRONTIER_SCHEMA])
@@ -549,37 +512,17 @@ def crawl(
             "max_page", "province", "city", "county", "site_name",
             "fetch_ok",
         ]
-        if params.defer_detail_parse:
-            # lists-only enrich: detail pages are terminal (their text
-            # feeds only the items output), so the wave-critical
-            # checkpoint carries list anns + slim detail metadata — the
-            # ~GBs of detail text never enter the block store. The kind
-            # filters push below the join, so the two branches together
-            # probe each admitted row once.
-            lists = (
-                base.filter(F.col("kind") == "list")
-                .withColumn(
-                    "_e",
-                    enrich_page(F.col("html"), F.col("kind"), F.col("parse_kind")),
-                )
-                .select(*meta_cols, F.col("_e.anns").alias("anns"))
+        enriched = (
+            base
+            .withColumn(
+                "_e", enrich_page(F.col("html"), F.col("kind"), F.col("parse_kind"))
             )
-            dets = base.filter(F.col("kind") != "list").select(
-                *meta_cols, F.lit(None).cast(ENRICH_STRUCT["anns"].dataType).alias("anns")
+            .select(
+                *meta_cols,
+                F.col("_e.anns").alias("anns"),
+                F.col("_e.text").alias("text"),
             )
-            enriched = lists.unionByName(dets)
-        else:
-            enriched = (
-                base
-                .withColumn(
-                    "_e", enrich_page(F.col("html"), F.col("kind"), F.col("parse_kind"))
-                )
-                .select(
-                    *meta_cols,
-                    F.col("_e.anns").alias("anns"),
-                    F.col("_e.text").alias("text"),
-                )
-            )
+        )
         # piggyback the wave's row counts on the checkpoint action via
         # observe(): CollectMetrics accumulates per-task during the
         # materialization, so n_admitted / n_miss / n_items cost ZERO
@@ -610,9 +553,8 @@ def crawl(
         if state_fut is not None:
             seen, shards, blobs = state_fut.result()
             state_fut = None
-            if blobs is not None:
-                scratch_pool.append(blobs)
-        elif blobs_warm is not None:
+            scratch_pool.append(blobs)
+        else:
             blobs_warm.result()  # surface background densify errors
         clk.tick("state_join")
 
@@ -689,7 +631,7 @@ def crawl(
         fresh = dd.filter_new(
             cand, seen, blobs, params.n_shards, params.bloom_bits_per_shard,
             prebuilt_blobs=True,
-        ) if blobs is not None else dd.filter_new(cand, seen, None)
+        )
         # fresh keeps parent_url per citing page
         fresh = _scratch(fresh, scratch_pool)
         clk.tick("dedup_fresh_built")
@@ -759,10 +701,9 @@ def crawl(
                 F.lit(None).cast("string").alias("origin_url"),
             )
         )
-        new_pages = (
-            dd.filter_new(next_pages, seen, blobs, params.n_shards,
-                          params.bloom_bits_per_shard, prebuilt_blobs=True)
-            if blobs is not None else dd.filter_new(next_pages, seen, None)
+        new_pages = dd.filter_new(
+            next_pages, seen, blobs, params.n_shards, params.bloom_bits_per_shard,
+            prebuilt_blobs=True,
         )
         clk.tick("next_pages_built")
 
@@ -772,35 +713,11 @@ def crawl(
         # (text was extracted in the single enrich pass; provenance cols
         # were joined before the checkpoint)
         details = fetched.filter((F.col("kind") == "detail") & F.col("fetch_ok"))
-        if params.defer_detail_parse:
-            # text extraction re-joins the slim detail rows against the
-            # pre-bucketed corpus and runs the SAME detail-extract UDF
-            # lazily — it executes when the items output materializes
-            # (sink write / accumulator collapse), off the wave-critical
-            # path, UDF → sink with no intermediate text checkpoint
-            wave_items = (
-                details.select(
-                    "url", "source", "title", "publish_time", "origin_url",
-                    "province", "city", "county", "site_name", "parse_kind",
-                )
-                .join(pages_slim, "url", "left")
-                .withColumn(
-                    "_e",
-                    enrich_page(F.col("html"), F.lit("detail"), F.col("parse_kind")),
-                )
-                .select(
-                    "url", "source", "title", "publish_time", "origin_url",
-                    "province", "city", "county", "site_name",
-                    F.col("_e.text").alias("text"),
-                    F.lit(wave).alias("wave"),
-                )
-            )
-        else:
-            wave_items = details.select(
-                "url", "source", "title", "publish_time", "origin_url",
-                "province", "city", "county", "site_name", "text",
-                F.lit(wave).alias("wave"),
-            )
+        wave_items = details.select(
+            "url", "source", "title", "publish_time", "origin_url",
+            "province", "city", "county", "site_name", "text",
+            F.lit(wave).alias("wave"),
+        )
         # ---- outputs + state transition ----------------------------------
         # new_frontier is the only job here: the wave's counts were
         # observed during the fetch checkpoint, and werr / wave_items
@@ -838,12 +755,9 @@ def crawl(
             seen2 = seen.unionByName(
                 new_frontier.select("canon", "url_hash")
             ).coalesce(n_part)
-            shards2 = (
-                dd.update_shards(
-                    shards, new_frontier.select("url_hash"),
-                    params.n_shards, params.bloom_bits_per_shard,
-                )
-                if shards is not None else None
+            shards2 = dd.update_shards(
+                shards, new_frontier.select("url_hash"),
+                params.n_shards, params.bloom_bits_per_shard,
             )
             state_fut = state_ex.submit(_commit_state, seen2, shards2)
             frontier2 = deferred.unionByName(new_frontier).coalesce(n_part)
@@ -863,21 +777,18 @@ def crawl(
         )
         for df in scratch_pool:
             df.unpersist()
-        if os.environ.get("CRAWLER_SPARK_VERBOSE"):
-            import time as _time
-            print(f"[crawl] {_time.strftime('%H:%M:%S')} {metrics[-1]}", flush=True)
+        if _VERBOSE:
+            print(f"[crawl] {time.strftime('%H:%M:%S')} {metrics[-1]}", flush=True)
 
         # ---- durable commit (idempotent; see lakestore docstring) --------
         if store is not None:
             # the durable path needs the committed seen/shards NOW (they
             # are staged below), so the state pipeline is joined here —
             # the per-wave durability tax is paid serially and honestly.
+            # state_fut stays set: the next wave's state join takes the
+            # same checkpoints and the blobs already densified from them.
             if state_fut is not None:
-                seen, shards, _b = state_fut.result()
-                state_fut = None
-                if _b is not None:
-                    # next wave re-densifies from the re-read snapshot
-                    _b.unpersist()
+                seen, shards, _ = state_fut.result()
             cid = f"w{wave}"
             store.append(wave_items, "items", cid)
             store.append(werr, "errors", cid)
@@ -887,39 +798,25 @@ def crawl(
                 spark.createDataFrame([tuple(metrics[-1].values())], METRICS_SCHEMA),
                 "metrics", cid,
             )
-            # stage every snapshot table first; the checkpoint's single
-            # atomic rename then commits them ALL at once (no window
-            # where frontier is at w(k) but seen at w(k-1) — lakestore
-            # docstring, ADVICE round 1)
-            snaps = {"frontier": cid, "seen": cid}
-            store.stage_snapshot(frontier, "frontier", cid)
-            store.stage_snapshot(seen, "seen", cid)
-            if shards is not None:
-                snaps["shards"] = cid
-                store.stage_snapshot(shards, "shards", cid)
-            store.save_checkpoint(
-                {"wave": wave, "pop_base": pop_base, "snapshots": snaps}
-            )
-            for tb, c in snaps.items():
-                store.gc_snapshots(tb, c)
-            # re-read state so each wave starts from durable parquet
-            frontier = store.read_snapshot(spark, "frontier", cid)
-            seen = store.read_snapshot(spark, "seen", cid)
-            if shards is not None:
-                shards = store.read_snapshot(spark, "shards", cid)
+            # the next wave keeps reading the in-memory checkpoints, never
+            # the staged parquet: GC deletes a snapshot once the next one
+            # commits, and lazy outputs (errors) still reference the state
+            # they were derived from
+            _commit_snapshots(store, wave, pop_base,
+                              frontier=frontier, seen=seen, shards=shards)
             # the durability tax is MEASURED per wave (everything from the
             # state-pipeline join through appends, staging, the atomic
-            # checkpoint, GC and the durable re-read) — bench reads this
-            # step instead of subtracting a separate no-store run, which
-            # drifts with ambient load
+            # checkpoint and GC) — bench reads this step instead of
+            # subtracting a separate no-store run, which drifts with
+            # ambient load
             clk.tick("store_commit")
 
     # drain the state pipeline (a max_waves exit can leave the last
-    # wave's seen/shards commit in flight)
+    # wave's seen/shards commit in flight; a durable crawl keeps the
+    # last joined result, whose blobs are still cached)
     if state_fut is not None:
-        seen, shards, _b = state_fut.result()
-        if _b is not None:
-            _b.unpersist()
+        seen, shards, blobs = state_fut.result()
+        blobs.unpersist()
     state_ex.shutdown(wait=True)
     if not pages_prepartitioned:
         pages_slim.unpersist()

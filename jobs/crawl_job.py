@@ -31,7 +31,6 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--max-waves", type=int, default=50)
     ap.add_argument("--wave-seconds", type=float, default=8.0)
-    ap.add_argument("--obey-robots", action="store_true")
     ap.add_argument("--bench-sections", type=int, default=0,
                     help=">0: use the synthetic bench site set at this many sections")
     args = ap.parse_args()
@@ -65,7 +64,7 @@ def main() -> None:
     res = crawl(
         spark, pages,
         CrawlParams(wave_seconds=args.wave_seconds, max_waves=args.max_waves,
-                    obey_robots=args.obey_robots, record_order=False),
+                    record_order=False),
         sites=sites, store=store, resume=args.resume,
     )
     summary = {

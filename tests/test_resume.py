@@ -7,6 +7,8 @@ from crawler_spark.corpus import webgen as wg
 from crawler_spark.engine.driver import CrawlParams, ITEMS_SCHEMA, crawl
 from crawler_spark.state.lakestore import LakeStore
 
+PARAMS = CrawlParams(wave_seconds=4.0, n_shards=4, max_waves=100)
+
 
 @pytest.fixture(scope="module")
 def small_pages(spark):
@@ -15,6 +17,13 @@ def small_pages(spark):
     pages = spark.createDataFrame(wg.corpus_pandas(spec))
     pages.persist().count()
     return spec, pages
+
+
+@pytest.fixture(scope="module")
+def full_run(spark, small_pages, tmp_path_factory):
+    """The uninterrupted durable crawl the resumed runs must reproduce."""
+    store = LakeStore(str(tmp_path_factory.mktemp("full")))
+    return store, crawl(spark, small_pages[1], PARAMS, store=store)
 
 
 def _items_pdf(store, spark):
@@ -26,21 +35,17 @@ def _items_pdf(store, spark):
     )
 
 
-def test_resume_equals_uninterrupted(spark, small_pages, tmp_path_factory):
+def test_resume_equals_uninterrupted(spark, small_pages, full_run, tmp_path_factory):
     spec, pages = small_pages
-    params = CrawlParams(wave_seconds=4.0, use_bloom=True, n_shards=4, max_waves=100)
-
-    # uninterrupted run
-    s_full = LakeStore(str(tmp_path_factory.mktemp("full")))
-    r_full = crawl(spark, pages, params, store=s_full)
+    s_full, r_full = full_run
 
     # interrupted run: stop after 3 waves (simulated crash: just stop),
     # then resume from the checkpoint
     s_part = LakeStore(str(tmp_path_factory.mktemp("part")))
-    p3 = CrawlParams(**{**params.__dict__, "max_waves": 3})
+    p3 = CrawlParams(**{**PARAMS.__dict__, "max_waves": 3})
     crawl(spark, pages, p3, store=s_part)
     assert s_part.load_checkpoint()["wave"] == 3
-    r_resumed = crawl(spark, pages, params, store=s_part, resume=True)
+    r_resumed = crawl(spark, pages, PARAMS, store=s_part, resume=True)
 
     a = _items_pdf(s_full, spark)
     b = _items_pdf(s_part, spark)
@@ -56,11 +61,37 @@ def test_resume_equals_uninterrupted(spark, small_pages, tmp_path_factory):
     pd.testing.assert_frame_equal(pops_a, pops_b)
 
 
+def test_resume_without_shards_snapshot(spark, small_pages, full_run, tmp_path_factory):
+    """A checkpoint that names no shards snapshot resumes with a Bloom
+    rebuilt from the seen snapshot — never an empty one, which would
+    pass every already-seen URL as new and crawl it again. The cut is
+    after wave 4: a list page fetched later repeats the items of a
+    page parsed by then, so the resumed run meets URLs seen before it."""
+    import json
+    import os
+
+    spec, pages = small_pages
+    s_full, r_full = full_run
+
+    store = LakeStore(str(tmp_path_factory.mktemp("noshards")))
+    crawl(spark, pages, CrawlParams(**{**PARAMS.__dict__, "max_waves": 4}), store=store)
+    ckpt = store.load_checkpoint()
+    del ckpt["snapshots"]["shards"]
+    with open(os.path.join(store.root, "_checkpoint.json"), "w") as f:
+        json.dump(ckpt, f)
+    r_resumed = crawl(spark, pages, PARAMS, store=store, resume=True)
+
+    pd.testing.assert_frame_equal(_items_pdf(s_full, spark), _items_pdf(store, spark))
+    canons = [sorted(r["canon"] for r in res.seen.select("canon").collect())
+              for res in (r_full, r_resumed)]
+    assert canons[0] == canons[1]
+
+
 def test_uncommitted_wave_is_replayed(spark, small_pages, tmp_path_factory):
     """A wave directory written but not committed (crash between data
     write and manifest swap) must be invisible and safely overwritten."""
     spec, pages = small_pages
-    params = CrawlParams(wave_seconds=4.0, use_bloom=False, max_waves=2)
+    params = CrawlParams(wave_seconds=4.0, max_waves=2)
     store = LakeStore(str(tmp_path_factory.mktemp("crash")))
     crawl(spark, pages, params, store=store)
 
@@ -73,7 +104,7 @@ def test_uncommitted_wave_is_replayed(spark, small_pages, tmp_path_factory):
     # resume: must drop the uncommitted dir, then continue cleanly
     r = crawl(
         spark, pages,
-        CrawlParams(wave_seconds=4.0, use_bloom=False, max_waves=100),
+        CrawlParams(wave_seconds=4.0, max_waves=100),
         store=store, resume=True,
     )
     after = _items_pdf(store, spark)
@@ -82,7 +113,7 @@ def test_uncommitted_wave_is_replayed(spark, small_pages, tmp_path_factory):
     assert "w3" in store.commits("items")
 
 
-def test_torn_multi_table_snapshot_swap(spark, small_pages, tmp_path_factory):
+def test_torn_multi_table_snapshot_swap(spark, small_pages, full_run, tmp_path_factory):
     """Crash AFTER staging some snapshot tables but BEFORE the checkpoint
     (the atomic multi-table commit point): resume must ignore the staged
     dirs, GC them, and replay from the last consistent wave — final
@@ -90,13 +121,10 @@ def test_torn_multi_table_snapshot_swap(spark, small_pages, tmp_path_factory):
     import os
 
     spec, pages = small_pages
-    params = CrawlParams(wave_seconds=4.0, use_bloom=True, n_shards=4, max_waves=100)
-
-    s_full = LakeStore(str(tmp_path_factory.mktemp("full2")))
-    crawl(spark, pages, params, store=s_full)
+    s_full, _ = full_run
 
     s_torn = LakeStore(str(tmp_path_factory.mktemp("torn")))
-    p2 = CrawlParams(**{**params.__dict__, "max_waves": 2})
+    p2 = CrawlParams(**{**PARAMS.__dict__, "max_waves": 2})
     crawl(spark, pages, p2, store=s_torn)
     ckpt = s_torn.load_checkpoint()
     assert ckpt["wave"] == 2 and ckpt["snapshots"]["frontier"] == "w2"
@@ -108,7 +136,7 @@ def test_torn_multi_table_snapshot_swap(spark, small_pages, tmp_path_factory):
     s_torn.stage_snapshot(s_torn.read_snapshot(spark, "seen", "w2").limit(1), "seen", "w3")
     assert os.path.isdir(s_torn.root + "/frontier/w3")
 
-    r = crawl(spark, pages, params, store=s_torn, resume=True)
+    r = crawl(spark, pages, PARAMS, store=s_torn, resume=True)
     assert r.waves >= 3
 
     a = _items_pdf(s_full, spark)

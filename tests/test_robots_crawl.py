@@ -11,8 +11,9 @@ import pytest
 
 from crawler_spark.corpus import oracle as orc
 from crawler_spark.corpus import webgen as wg
-from crawler_spark.engine.driver import CrawlParams, crawl
+from crawler_spark.engine.driver import ERRORS_SCHEMA, CrawlParams, crawl
 from crawler_spark.operators.robots import ROBOTS_SCHEMA
+from crawler_spark.state.lakestore import LakeStore
 
 RULES = [
     # deny the hcggg section of the zybtp host entirely
@@ -24,7 +25,7 @@ RULES = [
 
 
 @pytest.fixture(scope="module")
-def robot_run(spark):
+def robot_inputs(spark):
     spec = wg.CorpusSpec(default_pages=4, items_per_page=6, empty_last_page_sources=())
     pages = spark.createDataFrame(wg.corpus_pandas(spec))
     pages.persist().count()
@@ -32,10 +33,15 @@ def robot_run(spark):
         [(r["host"], r["path_prefix"], r["allow"], r["crawl_delay"]) for r in RULES],
         ROBOTS_SCHEMA,
     )
+    return spec, pages, rules_df
+
+
+@pytest.fixture(scope="module")
+def robot_run(spark, robot_inputs):
+    spec, pages, rules_df = robot_inputs
     res = crawl(
         spark, pages,
-        CrawlParams(wave_seconds=8.0, obey_robots=True, use_bloom=True,
-                    n_shards=8, max_waves=100),
+        CrawlParams(wave_seconds=8.0, obey_robots=True, n_shards=8, max_waves=100),
         robots_rules=rules_df,
     )
     golden = orc.oracle_crawl(
@@ -77,3 +83,27 @@ def test_robots_delay_override_slows_host(robot_run):
         (r["pop_seq"], r["wave"], r["url"]) for r in res.pops.orderBy("pop_seq").collect()
     ]
     assert got == golden.pops
+
+
+def test_robots_needs_rules(spark, robot_inputs):
+    with pytest.raises(ValueError, match="robots_rules"):
+        crawl(spark, robot_inputs[1], CrawlParams(obey_robots=True, max_waves=1))
+
+
+def test_durable_robots_errors_readable(spark, robot_inputs, tmp_path):
+    """The errors output of a durable robots-gated crawl stays readable
+    after crawl() returns: the store GCs each superseded snapshot, so
+    the lazily accumulated errors must not read them. Fewer than 8
+    waves, so the output accumulator never collapses them into a
+    checkpoint."""
+    _, pages, rules_df = robot_inputs
+    store = LakeStore(str(tmp_path / "store"))
+    res = crawl(
+        spark, pages,
+        CrawlParams(wave_seconds=8.0, obey_robots=True, n_shards=8, max_waves=4),
+        store=store, robots_rules=rules_df,
+    )
+    assert res.waves == 4
+    got = sorted(tuple(r) for r in res.errors.collect())
+    want = sorted(tuple(r) for r in store.read(spark, "errors", ERRORS_SCHEMA).collect())
+    assert got == want and any(r[4] == "robots" for r in got)
